@@ -759,8 +759,10 @@ def q_gapfill_hourly(spark, sf_dir):
     from laji_pygeoapi_spark.operators.temporal import gap_fill_hourly
     ev = _tbl(spark, sf_dir, "events")
     out = gap_fill_hourly(ev)
-    return out.withColumn("hour",
-                          F.date_format("hour", "yyyy-MM-dd'T'HH:mm:ss'Z'"))
+    res = out.withColumn("hour",
+                         F.date_format("hour", "yyyy-MM-dd'T'HH:mm:ss'Z'"))
+    res._cached_deps = out._cached_deps  # the persisted rollup
+    return res
 
 
 def q_hll_distinct(spark, sf_dir):

@@ -388,8 +388,9 @@ def items(df: DataFrame, bbox=None, intersects: bytes | None = None,
 
 
 def _apply_intersects(df: DataFrame, polygon_wkb: bytes) -> DataFrame:
-    """Add a boolean ``_intersects`` column: envelope prefilter (pure JVM
-    range predicates — scan-prunable) AND exact PIP of the feature point.
+    """Filter on the envelope prefilter (pure JVM range predicates —
+    scan-prunable), then add a boolean ``_intersects`` column: exact PIP of
+    the feature point.
 
     Point features get exact semantics; non-points use their centroid +
     envelope overlap (CENTER_POINT serving representation, the reference's
@@ -424,9 +425,11 @@ def _apply_intersects(df: DataFrame, polygon_wkb: bytes) -> DataFrame:
         from ..operators.spatial import PARTITION_RES
         cover = C.hex_polyfill(geom, PARTITION_RES)
         env_ok = F.col("cell_prefix").isin([int(c) for c in cover]) & env_ok
-    return df.withColumn(
-        "_intersects",
-        F.when(env_ok, _pip(F.col("lon"), F.col("lat"))).otherwise(F.lit(False)))
+    # env_ok as its own filter, not a CASE around the UDF: only a plain
+    # conjunct reaches the scan (PartitionFilters / PushedFilters) and runs
+    # below the ArrowEvalPython, so PIP sees only the surviving rows
+    return df.filter(env_ok).withColumn("_intersects",
+                                        _pip(F.col("lon"), F.col("lat")))
 
 
 def _id_column(df: DataFrame) -> str:

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
+from ..session import release
 from . import text as TX
 
 # ------------------------------------------------------------------ exact
@@ -270,6 +271,7 @@ def minhash_lsh_candidates(df: DataFrame, text_col: str = "text",
     r = num_perm // bands
     sig = minhash_signature_udf(num_perm, shingle_n=shingle_n)
     # tokens staged into their own projection (lambda re-evaluation trap)
+    deps = []
     if toks is None:
         toks = (_spread_small_input(df.select(id_col, text_col))
                 .select(F.col(id_col).alias("id"),
@@ -277,6 +279,7 @@ def minhash_lsh_candidates(df: DataFrame, text_col: str = "text",
                 .localCheckpoint())  # barrier: the size filter below must
         # not be substituted through the UDF projection (second
         # ArrowEvalPython); hot callers pass persisted toks anyway
+        deps = [toks]
     hashed = (toks.filter(F.size("_toks") > 0)  # token-less docs can't near-dup
                   .select("id", F.transform("_toks", lambda t: F.xxhash64(t)).alias("_th")))
     # no isNotNull filter on sig: the size(_toks) > 0 prefilter already
@@ -292,7 +295,9 @@ def minhash_lsh_candidates(df: DataFrame, text_col: str = "text",
         "id", "band",
         F.xxhash64(F.col("band"), F.slice("sig", F.col("band") * r + 1, r).cast("string")).alias("bucket"),
     )
-    return _bucket_pairs(banded)
+    out = _bucket_pairs(banded)
+    out._cached_deps = deps  # the token checkpoint made here, if any
+    return out
 
 
 def _shingle_hashes(toks, n: int = 3):
@@ -362,7 +367,7 @@ def jaccard_verify(df: DataFrame, pairs: DataFrame, text_col: str = "text",
                                       .otherwise(F.lit(0.0))))
     out = (j.filter(F.col("jaccard") >= threshold)
             .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard")))
-    out._cached_deps = [pairs]
+    out._cached_deps = [pairs] + getattr(pairs, "_cached_deps", [])
     return out
 
 
@@ -786,6 +791,16 @@ def cluster_representatives(labels: DataFrame, scores: DataFrame,
              .filter(F.col("_rn") == 1).drop("_rn"))
 
 
+def _symmetric_edges(edges: DataFrame, id_a: str, id_b: str) -> DataFrame:
+    """Distinct directed (src, dst) edges in both directions, from ONE
+    evaluation of ``edges``: explode(array(struct fwd, struct rev))."""
+    return (edges.select(F.explode(F.array(
+                F.struct(F.col(id_a).alias("src"), F.col(id_b).alias("dst")),
+                F.struct(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))))
+            .alias("_e"))
+            .select("_e.src", "_e.dst").distinct())
+
+
 def connected_components(edges: DataFrame, id_a: str = "id_a",
                          id_b: str = "id_b", vertices: DataFrame | None = None,
                          max_iter: int = 20, jump_after: int = 2,
@@ -839,12 +854,7 @@ def connected_components(edges: DataFrame, id_a: str = "id_a",
     # chain inside the sizing count (round-6 follow-up; measured 4.9 s ->
     # ~2.5 s at the 10x corpus).  explode(array(struct fwd, struct rev))
     # yields exactly the same row set from a single evaluation.
-    und0 = (edges.select(F.explode(F.array(
-                F.struct(F.col(id_a).alias("src"), F.col(id_b).alias("dst")),
-                F.struct(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))))
-            .alias("_e"))
-            .select("_e.src", "_e.dst").distinct())
-    und0 = und0.persist()
+    und0 = _symmetric_edges(edges, id_a, id_b).persist()
     try:
         n_edges = und0.count()  # materializes the persist; sizes everything
         if n_edges <= 2 * small_graph_max_edges:
@@ -922,7 +932,7 @@ def connected_components(edges: DataFrame, id_a: str = "id_a",
             # first round's `und` dependency) are no longer readable from
             # the result — release instead of leaking checkpoint blocks
             # across the 62-query shared session (round-5 review)
-            ckpts.pop(0).unpersist()
+            release(ckpts.pop(0))
             if changed == 0:
                 labels._cc_rounds = rounds
                 break
@@ -933,7 +943,7 @@ def connected_components(edges: DataFrame, id_a: str = "id_a",
             raise RuntimeError(
                 f"connected_components did not converge in {max_iter} "
                 "rounds (component diameter exceeds max_iter); raise it")
-        und.unpersist()
+        release(und)
         # the final checkpoint backs the returned frame: hand its release
         # to the caller via the repo's deterministic-release convention
         labels._cached_deps = list(ckpts)
@@ -941,9 +951,9 @@ def connected_components(edges: DataFrame, id_a: str = "id_a",
     except Exception:
         und0.unpersist()
         if und is not None:
-            und.unpersist()
+            release(und)
         for c in ckpts:
-            c.unpersist()
+            release(c)
         raise
 
 

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from ..operators import dedup as DD
 from ..operators import text as TX
+from ..session import release
 
 
 def _curated_survivors(df: DataFrame, lang: str, min_quality: float,
@@ -66,12 +67,13 @@ def _curated_survivors(df: DataFrame, lang: str, min_quality: float,
 
 
 def release_caches(df: DataFrame) -> None:
-    """Unpersist the cached dependencies a fused pipeline attached to its
-    result (``_cached_deps``) — call AFTER materializing the result.
+    """Release the cached dependencies (persists and checkpoints) a fused
+    pipeline attached to its result (``_cached_deps``) — call AFTER
+    materializing the result.
     Round-3 ADVICE: the fused entry points persist() projections that
     otherwise leak cached blocks for the session's lifetime."""
     for dep in getattr(df, "_cached_deps", ()):
-        dep.unpersist()
+        release(dep)
 
 
 def curate(df: DataFrame, lang: str = "en", min_quality: float = 0.6,
@@ -262,10 +264,12 @@ def pack_sequences(df: DataFrame, budget: int = 2048,
     off = F.coalesce(*[F.when(F.col("_b") == b, F.lit(v))
                        for b, v in offsets.items()]) if offsets else F.lit(0)
     cum_excl = off + F.col("_cum_in") - F.col("_n")
-    return (within.select(
+    out = within.select(
         id_col, F.col("_n").alias("n_tokens"),
         (cum_excl / budget).cast("long").alias("seq_bin"),
-        F.pmod(cum_excl, F.lit(budget)).cast("long").alias("bin_offset")))
+        F.pmod(cum_excl, F.lit(budget)).cast("long").alias("bin_offset"))
+    out._cached_deps = [within]
+    return out
 
 
 def assign_shards(df: DataFrame, n_shards: int = 8,

@@ -53,3 +53,13 @@ def get_spark(app: str = "laji-pygeoapi-spark", master: str | None = None,
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, str(v))
     return builder.getOrCreate()
+
+
+def release(df) -> None:
+    """Free the blocks behind ``df``, whether it was persisted or
+    (local-)checkpointed: ``unpersist()`` is a no-op on a checkpointed
+    frame, whose blocks belong to the RDD under its ``LogicalRDD``."""
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
+    df.unpersist()

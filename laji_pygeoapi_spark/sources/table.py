@@ -175,8 +175,7 @@ def write_partitioned(df: DataFrame, root: str, job_id: str,
     if bloom_col:
         manifest_doc["bloom"] = {"col": bloom_col, "bits": bloom_bits,
                                  "k": _BLOOM_K}
-    _write_json_atomic(os.path.join(root, "_manifests", f"manifest-{job_id}.json"),
-                       manifest_doc)
+    _write_json_atomic(manifest_path, manifest_doc)
     if staged:
         # durable commit record that survives manifest archival (compaction)
         _write_json_atomic(commit_marker,
@@ -300,9 +299,11 @@ def build_manifest(df: DataFrame, part_cols, bloom_col: str | None = None,
                    bloom_bits: int = 8192) -> list[dict]:
     """Per-partition lineage: cell range, row count, xor-checksum — one
     distributed aggregation, no collect of data rows.  With ``bloom_col``,
-    also a per-partition Bloom bitset (``bloom_bits`` bits as int64 words,
-    bit_or-aggregated — associative, map-side combined like everything
-    else in this manifest)."""
+    also a per-partition Bloom bitset (``bloom_bits`` bits as signed int64
+    words): the same aggregation collects each staged bit-position column
+    as a set, and the driver ORs the positions into words.  Collect bound:
+    at most ``n_partitions`` rows, each carrying at most
+    k·min(rows, ``bloom_bits``) positions."""
     # sorted so the checksum is invariant to physical column order
     # (partition columns move to the tail on read-back)
     hash_cols = sorted(c for c in df.columns if c not in ("bytes", "geometry"))
@@ -316,24 +317,21 @@ def build_manifest(df: DataFrame, part_cols, bloom_col: str | None = None,
                  F.min("lat").alias("min_lat"), F.max("lat").alias("max_lat")]
     if "cell_prefix" in df.columns:
         aggs += [F.min("cell_prefix").alias("min_cell"), F.max("cell_prefix").alias("max_cell")]
-    n_words = 0
-    if bloom_col and bloom_col in df.columns:
-        n_words = bloom_bits // 64
-        # stage the k bit positions once, then 64-bit words accumulate via
-        # bit_or over per-row masks — pure JVM integer expressions
+    bloom = bool(bloom_col) and bloom_col in df.columns
+    if bloom:
         df = _with_bloom_positions(df, bloom_col, bloom_bits)
-        for w in range(n_words):
-            row_mask = " | ".join(
-                f"IF(_bp{i} DIV 64 = {w}, SHIFTLEFT(CAST(1 AS BIGINT), "
-                f"CAST(_bp{i} % 64 AS INT)), CAST(0 AS BIGINT))"
-                for i in range(_BLOOM_K))
-            aggs.append(F.expr(f"bit_or({row_mask})").alias(f"_bw{w}"))
+        aggs += [F.collect_set(f"_bp{i}").alias(f"_bp{i}") for i in range(_BLOOM_K)]
     rows = (df.groupBy(*part_cols).agg(*aggs) if part_cols else df.agg(*aggs)).collect()
     out = []
     for r in rows:
         d = r.asDict()
-        if n_words:
-            d["bloom_words"] = [int(d.pop(f"_bw{w}") or 0) for w in range(n_words)]
+        if bloom:
+            words = [0] * -(-bloom_bits // 64)
+            for i in range(_BLOOM_K):
+                for pos in d.pop(f"_bp{i}"):
+                    words[pos >> 6] |= 1 << (pos & 63)
+            # int64 as the JVM stores it: bit 63 is the sign
+            d["bloom_words"] = [w - (1 << 64) if w >> 63 else w for w in words]
         out.append(d)
     return out
 
@@ -476,8 +474,7 @@ def compact_store(spark: SparkSession, root: str, job_id: str,
     # keep answering lookup_partitions after the deltas are archived
     bloom_meta = next((d["bloom"] for d in _live_manifests(root)
                        if d.get("bloom")), None)
-    before = (build_manifest(df, part_cols) if part_cols
-              else build_manifest(df, []))
+    before = build_manifest(df, part_cols)
     (df.repartition(max_files_per_partition, *[F.col(c) for c in part_cols])
        .write.mode("overwrite").partitionBy(*part_cols).parquet(tmp_dir))
     after_df = spark.read.parquet(tmp_dir)

@@ -933,16 +933,19 @@ def test_connected_components_small_graph_fast_path_equivalence(spark):
 def test_connected_components_releases_iteration_checkpoints(spark):
     """The CC loop must free superseded per-round checkpoints and hand the
     final one to the caller via _cached_deps (round-5 review: checkpoint
-    blocks accumulated across the shared 60+-query session)."""
+    blocks accumulated across the shared 60+-query session); releasing
+    it leaves no persisted RDD behind."""
     edges = spark.createDataFrame(
         pd.DataFrame([{"id_a": i, "id_b": i + 1} for i in range(0, 40, 2)]))
+    before = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
     out = DD.connected_components(edges, small_graph_max_edges=0)
     deps = getattr(out, "_cached_deps", [])
     assert len(deps) == 1  # exactly the final checkpoint survives
     got = {r["id"]: r["comp"] for r in out.collect()}
     assert got[1] == 0 and got[39] == 38
-    for d in deps:
-        d.unpersist()
+    from laji_pygeoapi_spark.plans.curation import release_caches
+    release_caches(out)
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keys()) <= before
 
 
 def test_assign_shards_huge_ids_no_overflow(spark):

@@ -43,6 +43,26 @@ def test_partition_pruning_on_cell_prefix(stored):
     assert "cell_prefix" in plan.split("PartitionFilters")[1].split("]")[0]
 
 
+def test_intersects_page_prunes_partitions(stored):
+    """An intersects page over a cell_prefix store prunes partitions at the
+    scan and runs the PIP UDF once: the cover-and-envelope test is a plain
+    filter below the UDF, not a CASE around it (no scan can take that)."""
+    from laji_pygeoapi_spark.api import features as API
+    from laji_pygeoapi_spark.kernels import geom as G, wkb as W
+    tri = W.polygon([(21.0, 59.6), (29.0, 59.6), (25.0, 63.5)])
+    page, matched = API.items(stored, intersects=W.dumps(tri), limit=10000,
+                              count_matched=True)
+    plan = page._jdf.queryExecution().executedPlan().toString()
+    assert "cell_prefix" in plan.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
+    assert "lon" in plan.split("PushedFilters: [", 1)[1].split("]", 1)[0]
+    assert plan.count("ArrowEvalPython") == 1, plan
+    pdf = stored.select("image_id", "lon", "lat").toPandas()
+    inside = G.points_in_polygon(pdf["lon"].to_numpy(), pdf["lat"].to_numpy(), tri)
+    expected = set(pdf.loc[inside, "image_id"])
+    assert {r["image_id"] for r in page.collect()} == expected
+    assert matched == len(expected) > 0
+
+
 def test_star_join_broadcasts_dims(spark):
     c = spark.read.parquet("/root/testdata/sf0.001/customer.parquet")
     n = spark.read.parquet("/root/testdata/sf0.001/nation.parquet")
@@ -119,14 +139,51 @@ def test_every_driver_query_has_an_oracle():
     assert q == o, f"missing oracles: {q - o}; orphan oracles: {o - q}"
 
 
+@pytest.fixture(scope="module")
+def leaf_tables(spark, tmp_path_factory):
+    """Small ``documents`` and ``events`` driver tables (with near-dup
+    documents) in the layout the driver queries read."""
+    import numpy as np
+    import pandas as pd
+    d = str(tmp_path_factory.mktemp("leaf_tables"))
+    rng = np.random.RandomState(5)
+    vocab = [f"w{i}" for i in range(80)]
+    texts = [" ".join(rng.choice(vocab, 40)) for _ in range(60)]
+    texts += [t + " extra" for t in texts[:10]]
+    spark.createDataFrame(pd.DataFrame({"doc_id": range(len(texts)), "text": texts})) \
+        .write.parquet(f"{d}/documents.parquet")
+    ts = pd.Timestamp("2024-01-01") + pd.to_timedelta(rng.randint(0, 72 * 60, 300), "min")
+    spark.createDataFrame(pd.DataFrame({
+        "ts": ts, "event_type": rng.choice(["a", "b", "c"], 300),
+        "value": rng.uniform(0, 10, 300).round(2)})).write.parquet(f"{d}/events.parquet")
+    return d
+
+
+@pytest.mark.parametrize("name", ["minhash_pairs", "gapfill_hourly",
+                                  "pack_sequences"])
+def test_driver_leaf_releases_every_persist(spark, leaf_tables, name):
+    """After release_caches, a driver leaf leaves no persisted RDD behind:
+    every persist or checkpoint it makes is registered on the frame it
+    returns, also when the query wraps the operator's result in a further
+    projection."""
+    import __spark_entry__ as entry
+    from laji_pygeoapi_spark.plans.curation import release_caches
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    df = entry.queries()[name](spark, leaf_tables)
+    df.toPandas()
+    release_caches(df)
+    assert set(jsc.getPersistentRDDs().keys()) <= before
+
+
 def test_cc_symmetrization_single_edge_evaluation(spark):
     """Round-6 second session: connected_components must symmetrize the
     edge input in ONE pass (explode of fwd+rev structs), not as
     union(edges, swapped) — the union form re-evaluated the upstream
     pair pipeline once per branch inside the sizing count.  Gate: the
     analyzed plan of the symmetrized frame contains exactly one
-    occurrence of a marker column from the edge input, and both CC paths
-    agree on a chain + isolated vertex graph."""
+    occurrence of a column-tied marker from the edge input (two in the
+    union form), and both CC paths agree on a chain + isolated vertex graph."""
     from laji_pygeoapi_spark.operators import dedup as DD
     edges = spark.createDataFrame([(1, 2), (2, 3), (5, 6)],
                                   "id_a long, id_b long")
@@ -142,17 +199,20 @@ def test_cc_symmetrization_single_edge_evaluation(spark):
     assert [(r.id, r.comp) for r in slow.orderBy("id").collect()] == expect
     for dep in getattr(slow, "_cached_deps", []):
         dep.unpersist()
-    # single-evaluation gate: tag the edge frame with an expensive-looking
-    # marker expression and count its occurrences in the optimized plan of
-    # the symmetrized explode (one Generate -> the marker appears once per
-    # side inside ONE project, never duplicated into two union branches)
-    marked = edges.withColumn("id_a", F.col("id_a") + F.xxhash64(F.lit("m4rk")) * 0)
-    und = marked.select(F.explode(F.array(
-        F.struct(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
-        F.struct(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))))
-        .alias("_e")).select("_e.src", "_e.dst").distinct()
-    plan = und._jdf.queryExecution().optimizedPlan().toString()
-    assert plan.count("m4rk") <= 1, plan
+    # single-evaluation gate: tag the edge frame with a marker expression
+    # tied to a column and count its occurrences in the optimized plan —
+    # once in the explode form, once per branch in the union-of-swapped
+    # form.  A literal-only marker is constant-folded and `x * 0` is
+    # simplified away; a local relation would absorb the projection.
+    marked = spark.range(3).select(
+        F.xxhash64("id", F.lit("m4rk")).alias("id_a"),
+        (F.col("id") + 1).alias("id_b"))
+
+    def marks(df):
+        return df._jdf.queryExecution().optimizedPlan().toString().count("m4rk")
+    assert marks(DD._symmetric_edges(marked, "id_a", "id_b")) == 1
+    swapped = marked.select(F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b"))
+    assert marks(marked.unionByName(swapped).distinct()) == 2
 
 
 def test_curation_head_generate_barrier(spark):

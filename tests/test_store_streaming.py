@@ -443,6 +443,74 @@ def test_bloom_survives_deltas_and_compaction(spark, root):
     assert store.lookup_partitions(root, "IMG_000000010") is not None
 
 
+def _reference_bloom(spark, root, col, bits):
+    """Per partition: bloom_words(v) ORed over the ids read back from
+    parquet, as the signed int64 words a manifest stores."""
+    words: dict[tuple, list[int]] = {}
+    for r in store.read_table(spark, root).select(*store.PARTITION_COLS, col).collect():
+        ws = words.setdefault((r["geom_kind"], r["cell_prefix"]), [0] * (bits // 64))
+        for w, m in store.bloom_words(r[col], bits):
+            ws[w] |= m
+    return {k: [w - (1 << 64) if w >= 1 << 63 else w for w in ws]
+            for k, ws in words.items()}
+
+
+def _manifest_bloom(doc):
+    return {(p["geom_kind"], p["cell_prefix"]): p["bloom_words"]
+            for p in doc["partitions"]}
+
+
+@pytest.mark.parametrize("key", ["image_id", "nid"])
+def test_bloom_words_match_python_reference(spark, root, key):
+    """The manifest's Bloom words equal a plain-Python build from the
+    stored ids, exactly — string ids, and integer ids of both signs — with
+    bit 63 (a negative int64 word) exercised; the compaction snapshot
+    carries the OR of the deltas' words."""
+    bits = 1024
+    imgs = ING.ingest_fused(fixtures.images_df(spark, 1200, with_bytes=False))
+    imgs = imgs.withColumn("nid", F.xxhash64("image_id"))
+    d1 = store.write_partitioned(imgs.filter(F.col("image_id") < "IMG_000000700"),
+                                 root, "d1", bloom_col=key, bloom_bits=bits)
+    assert _manifest_bloom(d1) == _reference_bloom(spark, root, key, bits)
+    assert any(w < 0 for ws in _manifest_bloom(d1).values() for w in ws)
+    d2 = store.write_partitioned(imgs.filter(F.col("image_id") >= "IMG_000000700"),
+                                 root, "d2", bloom_col=key, bloom_bits=bits)
+    snap = store.compact_store(spark, root, "c1")
+    ref = _reference_bloom(spark, root, key, bits)
+    assert _manifest_bloom(snap) == ref
+    merged = _manifest_bloom(d1)
+    for part, ws in _manifest_bloom(d2).items():
+        merged[part] = [a | b for a, b in zip(merged.get(part, [0] * len(ws)), ws)]
+    assert merged == ref
+
+
+def test_bloom_manifest_collect_bounded(spark, monkeypatch):
+    """build_manifest's driver collect stays within its stated bound: at
+    most n_partitions rows, each with at most k·min(rows, bloom_bits) bit
+    positions.  Small ``bloom_bits`` makes the ``bloom_bits`` arm bind."""
+    bits = 64
+    df = ING.ingest_fused(fixtures.images_df(spark, 2000, with_bytes=False))
+    n_parts = df.select(*store.PARTITION_COLS).distinct().count()
+    collected = []
+    cls = type(df)
+    real = cls.collect
+
+    def spy(self):
+        rows = real(self)
+        collected.append(rows)
+        return rows
+    monkeypatch.setattr(cls, "collect", spy)
+    out = store.build_manifest(df, list(store.PARTITION_COLS),
+                               bloom_col="image_id", bloom_bits=bits)
+    monkeypatch.undo()
+    (rows,) = collected
+    assert len(rows) == len(out) == n_parts
+    assert max(r["row_count"] for r in rows) > bits
+    for r in rows:
+        n_pos = sum(len(r[f"_bp{i}"]) for i in range(store._BLOOM_K))
+        assert n_pos <= store._BLOOM_K * min(r["row_count"], bits), r["row_count"]
+
+
 def test_get_feature_store_pruned(spark, root, monkeypatch):
     """api.get_feature(store_root=) reads only bloom-candidate partitions —
     proven by poisoning read_table (the full-scan path must not run)."""

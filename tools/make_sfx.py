@@ -12,8 +12,10 @@ Distribution care (naive replication distorts the dedup family):
   forming 10-cliques of trivial near-dups.
 * embeddings: fresh seeded random unit vectors per (vec_id, rep) — keeps
   LSH bucket load realistic instead of 10 exact copies per vector.
-* events / lineitem / orders: keys shifted per replica (user/order/part
-  cardinality scales with rows).
+* events / lineitem / orders: user and order keys shifted per replica
+  (user/order cardinality scales with rows).  Part and supplier keys are
+  NOT shifted, so per-part and per-supplier fan-in grows with the factor
+  — mind it when A/B-ing part- or supplier-keyed joins.
 * dims (nation/region/customer/part/supplier): copied as-is.
 
 Usage: python tools/make_sfx.py [out_dir] [factor]
