@@ -49,6 +49,10 @@ def get_spark(app: str = "laji-pygeoapi-spark", master: str | None = None,
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
+        # PySpark 4 captures the Python call site of every Column call (four
+        # py4j round trips and a stack walk each) only to name it in error
+        # messages; query building here makes thousands of such calls
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, str(v))

@@ -26,8 +26,9 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 PARTITION_COLS = ("geom_kind", "cell_prefix")
 
@@ -163,6 +164,7 @@ def write_partitioned(df: DataFrame, root: str, job_id: str,
         "job_id": job_id,
         "written_at": time.time(),
         "partition_cols": part_cols,
+        "schema": _store_schema(manifest_src.schema, part_cols).json(),
         "partitions": manifest,
         "total_rows": total_rows,
         # job metrics (north rule: lineage + METRICS per job)
@@ -238,7 +240,6 @@ def _check_bloom_dtype(df: DataFrame, col: str) -> None:
     diverge, and a diverging bloom makes ``lookup_partitions`` report a
     false MISS for a present key: a silently-empty GET, a wrong answer
     (round-3 ADVICE).  Failing the write is the safe contract."""
-    from pyspark.sql import types as T
     dtype = df.schema[col].dataType
     if not isinstance(dtype, (T.StringType, T.LongType, T.IntegerType,
                               T.ShortType, T.ByteType)):
@@ -368,9 +369,45 @@ def _recover_compaction(root: str) -> None:
         shutil.rmtree(os.path.join(root, "data.compact"), ignore_errors=True)
 
 
+def _nullable(t: T.DataType) -> T.DataType:
+    """``t`` with every field, array element and map value nullable."""
+    if isinstance(t, T.StructType):
+        return T.StructType([T.StructField(f.name, _nullable(f.dataType), True,
+                                           f.metadata) for f in t.fields])
+    if isinstance(t, T.ArrayType):
+        return T.ArrayType(_nullable(t.elementType), True)
+    if isinstance(t, T.MapType):
+        return T.MapType(_nullable(t.keyType), _nullable(t.valueType), True)
+    return t
+
+
+def _store_schema(schema: T.StructType, part_cols) -> T.StructType:
+    """The schema a read of the store returns: the data columns, then the
+    partition columns with the types they were written with, every field
+    nullable (as a parquet read makes them).  Manifests record it as
+    ``StructType.json()``."""
+    data = [f for f in schema.fields if f.name not in part_cols]
+    parts = [T.StructField(c, schema[c].dataType) for c in part_cols]
+    return _nullable(T.StructType(data + parts))
+
+
+def _reader(spark: SparkSession, root: str) -> DataFrameReader:
+    """``spark.read`` with the schema the live manifests record, so a read
+    launches no footer-inference job and partition values keep their
+    written types.  A store whose manifests carry no schema (written before
+    they did) is read by inference."""
+    schemas = {d.get("schema") for d in _live_manifests(root)}
+    if not schemas or None in schemas:
+        return spark.read
+    if len(schemas) > 1:
+        raise ValueError(f"store {root!r}: live manifests disagree on the "
+                         "table schema")
+    return spark.read.schema(T.StructType.fromJson(json.loads(schemas.pop())))
+
+
 def read_table(spark: SparkSession, root: str) -> DataFrame:
     _recover_compaction(root)  # heal crash gap / sweep stranded snapshots
-    return spark.read.parquet(os.path.join(root, "data"))
+    return _reader(spark, root).parquet(os.path.join(root, "data"))
 
 
 def verify_against_manifest(spark: SparkSession, root: str, job_id: str) -> dict:
@@ -468,8 +505,9 @@ def compact_store(spark: SparkSession, root: str, job_id: str,
     data_dir = os.path.join(root, "data")
     tmp_dir = os.path.join(root, "data.compact")
     old_dir = os.path.join(root, f"data.pre-compact-{job_id}")
-    df = spark.read.parquet(data_dir)
+    df = _reader(spark, root).parquet(data_dir)
     part_cols = [c for c in partition_cols if c in df.columns]
+    schema = _store_schema(df.schema, part_cols)
     # carry the bloom index through compaction: the snapshot manifest must
     # keep answering lookup_partitions after the deltas are archived
     bloom_meta = next((d["bloom"] for d in _live_manifests(root)
@@ -477,7 +515,7 @@ def compact_store(spark: SparkSession, root: str, job_id: str,
     before = build_manifest(df, part_cols)
     (df.repartition(max_files_per_partition, *[F.col(c) for c in part_cols])
        .write.mode("overwrite").partitionBy(*part_cols).parquet(tmp_dir))
-    after_df = spark.read.parquet(tmp_dir)
+    after_df = spark.read.schema(schema).parquet(tmp_dir)
     after = build_manifest(after_df, part_cols,
                            bloom_col=bloom_meta["col"] if bloom_meta else None,
                            bloom_bits=bloom_meta["bits"] if bloom_meta else 8192)
@@ -493,7 +531,7 @@ def compact_store(spark: SparkSession, root: str, job_id: str,
     shutil.rmtree(old_dir, ignore_errors=True)
     doc = {
         "job_id": job_id, "written_at": time.time(),
-        "partition_cols": part_cols, "partitions": after,
+        "partition_cols": part_cols, "schema": schema.json(), "partitions": after,
         "total_rows": sum(p["row_count"] for p in after),
         "metrics": {"kind": "compaction",
                     "n_partitions": len(after),
@@ -779,7 +817,7 @@ def read_candidate_partitions(spark: SparkSession, root: str, value) -> DataFram
                  data_dir, *[f"{k}={v}" for k, v in c.items()]))]
     if not paths:
         return read_table(spark, root).filter(F.lit(False))
-    return spark.read.option("basePath", data_dir).parquet(*paths)
+    return _reader(spark, root).option("basePath", data_dir).parquet(*paths)
 
 
 def count_from_manifest(root: str, **partition_filters) -> int | None:

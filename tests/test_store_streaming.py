@@ -784,3 +784,132 @@ def test_quantile_store_skips_torn_delta(spark, tmp_path):
     assert not os.path.isdir(torn), "compaction must sweep the torn delta"
     got = {r["q"]: r["est"] for r in SK.read_quantile_store(spark, root).collect()}
     assert got == want
+
+
+# ------------------------------------------------- store reads take the manifest schema
+
+def _build_jobs(spark, build):
+    """Spark jobs launched while ``build()`` constructs frames (no action)."""
+    import uuid
+    sc = spark.sparkContext
+    group = f"build-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _assert_schema_as_inferred(spark, root):
+    assert store.read_table(spark, root).schema == \
+        spark.read.parquet(os.path.join(root, "data")).schema
+
+
+def test_store_reads_launch_no_job(spark, root):
+    """Building a store read, a bloom GET and a bbox page launches no Spark
+    job (the manifest supplies the schema; no footer inference), and the
+    schema is the one inference would give, through append, compaction and
+    partition drop."""
+    from laji_pygeoapi_spark.api import features as API
+    imgs = ING.ingest_fused(fixtures.images_df(spark, 600, with_bytes=False))
+    store.write_partitioned(imgs.filter(F.col("image_id") < "IMG_000000400"),
+                            root, "base", bloom_col="image_id")
+
+    def build():
+        t = store.read_table(spark, root)
+        API.get_feature(t, "IMG_000000042", store_root=root)
+        page, _ = API.items(t, bbox=(21.0, 60.0, 26.0, 64.0), limit=10,
+                            store_root=root)
+        API.to_geojson(page)
+
+    def check():
+        assert _build_jobs(spark, build) == 0
+        _assert_schema_as_inferred(spark, root)
+
+    check()
+    store.write_partitioned(imgs.filter(F.col("image_id") >= "IMG_000000400"),
+                            root, "append", bloom_col="image_id", staged=True)
+    check()
+    store.compact_store(spark, root, "compact")
+    check()
+    first = store.list_partitions(root)[0]
+    assert store.drop_partitions(root, cell_prefix=first["cell_prefix"]) == 1
+    check()
+    assert store.read_table(spark, root).count() == store.count_from_manifest(root)
+
+
+@pytest.mark.parametrize("shape", ["salted", "cell_prefix"])
+def test_read_schema_matches_inference(spark, root, shape):
+    imgs = ING.ingest_fused(fixtures.images_df(spark, 300, with_bytes=False))
+    if shape == "salted":
+        store.write_partitioned(ING.salt_dense_cells(imgs, max_rows_per_task=20),
+                                root, "j1")
+    else:
+        store.write_partitioned(imgs, root, "j1", partition_cols=("cell_prefix",))
+    _assert_schema_as_inferred(spark, root)
+    assert store.verify_against_manifest(spark, root, "j1")["ok"]
+
+
+def test_partition_types_round_trip(spark, tmp_path):
+    """Partition columns read back with their written types: a small-valued
+    bigint stays bigint (so the manifest checksums verify) and zero-padded
+    strings stay strings (inference would read '001' as the integer 1)."""
+    from pyspark.sql import types as T
+    df = spark.range(300).select(
+        F.col("id").alias("v"), (F.col("id") % 3).alias("k"),
+        F.lpad((F.col("id") % 3).cast("string"), 3, "0").alias("s"))
+    for col, dtype, values in (("k", T.LongType(), {0, 1, 2}),
+                               ("s", T.StringType(), {"000", "001", "002"})):
+        root = str(tmp_path / col)
+        store.write_partitioned(df.drop("s" if col == "k" else "k"), root, "j1",
+                                partition_cols=(col,))
+        back = store.read_table(spark, root)
+        assert back.schema[col].dataType == dtype
+        assert {r[col] for r in back.select(col).distinct().collect()} == values
+        assert store.verify_against_manifest(spark, root, "j1")["ok"]
+
+
+def test_live_manifests_disagreeing_schemas_raise(spark, root):
+    imgs = ING.ingest_fused(fixtures.images_df(spark, 100, with_bytes=False))
+    store.write_partitioned(imgs, root, "j1")
+    store.write_partitioned(imgs.withColumn("extra", F.lit(1)), root, "j2")
+    with pytest.raises(ValueError, match=f"store {root!r}.*schema"):
+        store.read_table(spark, root)
+
+
+def test_schemaless_manifests_read_by_inference(spark, root):
+    """A store written before manifests carried a schema reads by footer
+    inference, as before."""
+    import json
+    imgs = ING.ingest_fused(fixtures.images_df(spark, 100, with_bytes=False))
+    store.write_partitioned(imgs, root, "j1", bloom_col="image_id")
+    path = os.path.join(root, "_manifests", "manifest-j1.json")
+    with open(path) as f:
+        doc = json.load(f)
+    del doc["schema"]
+    with open(path, "w") as f:
+        json.dump(doc, f)
+    assert _build_jobs(spark, lambda: store.read_table(spark, root)) >= 1
+    _assert_schema_as_inferred(spark, root)
+    assert store.read_table(spark, root).count() == 100
+    assert store.get_by_id(spark, root, "IMG_000000042").count() == 1
+    assert store.verify_against_manifest(spark, root, "j1")["ok"]
+
+
+def test_session_skips_call_site_capture(spark, root, monkeypatch):
+    """get_spark turns off PySpark's per-Column call-site capture: building
+    columns and a GeoJSON frame never walks the Python stack."""
+    from pyspark.errors import utils as err_utils
+    from laji_pygeoapi_spark.api import features as API
+
+    def boom(depth):
+        raise AssertionError("call-site capture ran")
+    store.write_partitioned(
+        ING.ingest_fused(fixtures.images_df(spark, 50, with_bytes=False)), root, "j1")
+    t = store.read_table(spark, root)
+    monkeypatch.setattr(err_utils, "_enable_debugging_cache", None)
+    monkeypatch.setattr(err_utils, "_capture_call_site", boom)
+    F.col("a").cast("string").alias("b")
+    API.to_geojson(t)
